@@ -148,20 +148,25 @@ def delta_agg_sum(old_agg: DataFrame, delta: DataFrame, keys, val: str, out: str
     j = contrib.join(old, cond, "left").select(
         *[F.col(f"_c.{k}").alias(k) for k in keys], "_dv", "_dn", "_ov", "_on"
     )
-    new_rows = j.select(
-        *keys,
-        (F.coalesce(F.col("_ov"), F.lit(0)) + F.col("_dv")).alias(out),
-        (F.coalesce(F.col("_on"), F.lit(0)) + F.col("_dn")).cast("long").alias("_n"),
+    new_n = (F.coalesce(F.col("_on"), F.lit(0)) + F.col("_dn")).cast("long")
+    retract = F.when(
+        F.col("_ov").isNotNull(),
+        F.struct(*keys, F.col("_ov").alias(out), F.col("_on").alias("_n"), F.lit(-1).alias(DELTA_COL)),
     )
-    retract = (
-        j.filter(F.col("_ov").isNotNull())
-        .select(*keys, F.col("_ov").alias(out), F.col("_on").alias("_n"), F.lit(-1).alias(DELTA_COL))
+    insert = F.when(
+        new_n > 0,
+        F.struct(
+            *keys,
+            (F.coalesce(F.col("_ov"), F.lit(0)) + F.col("_dv")).alias(out),
+            new_n.alias("_n"),
+            F.lit(1).alias(DELTA_COL),
+        ),
     )
-    insert = (
-        new_rows.filter(F.col("_n") > 0)
-        .select(*keys, out, "_n", F.lit(1).alias(DELTA_COL))
-    )
-    return consolidate(retract.unionByName(insert))
+    # both rows of a pair come from ONE pass over the join, so the
+    # source delta is read once (a union of two filtered branches plans
+    # two differently-pruned scans of it)
+    pairs = j.select(F.explode(F.array(retract, insert)).alias("_r"))
+    return consolidate(pairs.filter(F.col("_r").isNotNull()).select("_r.*"))
 
 
 def delta_agg_next(old_agg: DataFrame, agg_delta: DataFrame, keys=None) -> DataFrame:

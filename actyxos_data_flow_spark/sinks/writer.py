@@ -3,15 +3,21 @@ the IVM loop (view recompute → distributed snapshot diff → transactional
 apply).
 
 Scale design: the previous committed snapshot of every table lives as a
-**parquet mirror** on shared storage, so the per-epoch diff is a
-distributed full-outer join between two Spark-readable snapshots —
+**parquet mirror** on shared storage, so the per-epoch diff is one
+distributed union + count aggregate over two Spark-readable snapshots —
 O(|view|) cluster work, O(churn) driver traffic. Only the NET delta
 (which scales with the view's churn, not with the input — K2
 consolidation runs distributed first) is collected for the single-writer
 store, matching the reference's topology of shipping consolidated
-batches through an in-process channel
-(/root/reference/src/runner.rs:113-122). For a multi-writer JDBC target
-the same batches would be applied per-partition via foreachPartition.
+batches through an in-process channel (reference
+``src/runner.rs:113-122``). For a multi-writer JDBC target the same
+batches would be applied per-partition via foreachPartition.
+
+One evaluation per epoch: the view is lazy, and both the diff and the
+mirror write read the new snapshot, so :func:`write_snapshots` persists
+it first. The diff's collect (or stage) evaluates the view once and
+fills that cache; the mirror write reads the cache, not the event log.
+The cache is released when the epoch ends, committed or not.
 
 Crash consistency: the mirror pointer (`_mirror_state`) commits in the
 SAME sink transaction as the delta and offsets, and each epoch writes to
@@ -21,6 +27,10 @@ its own directory keyed by the offsets it reflects, so
   epoch; the retry recomputes the same delta and overwrites the same
   (orphaned) epoch directory — idempotent;
 - retry after commit → diff against the just-committed mirror is empty.
+
+Ordering: each table's delta is collected (or staged) BEFORE its mirror
+directory is overwritten — on a same-epoch retry the old and the new
+snapshot share that directory.
 
 If the mirror directory is lost (e.g. a fresh temp dir after restart),
 the writer rebuilds it once from the sink's stored rows — a recovery
@@ -39,12 +49,19 @@ from .spec import DbTable, Union
 from .dbapi import DbapiSink
 
 
-def deltas_to_rows(delta_df: DataFrame, table: DbTable) -> list[tuple[tuple, int]]:
-    """Collect a consolidated delta DataFrame as (row_values, mult)
-    pairs ordered by the table's written columns."""
+def consolidated_rows(delta: DataFrame, table: DbTable) -> list[tuple[tuple, int]]:
+    """Collect an already-consolidated delta (the table's written
+    columns + ``DELTA_COL``) as (row_values, mult) pairs ordered by the
+    table's written columns. Runs no aggregate of its own."""
     cols = [c.name for c in table.written_columns]
-    rows = consolidate(delta_df).select(*cols, DELTA_COL).collect()
-    return [(tuple(r[c] for c in cols), r[DELTA_COL]) for r in rows]
+    return [(tuple(r[c] for c in cols), r[DELTA_COL]) for r in delta.collect()]
+
+
+def deltas_to_rows(delta_df: DataFrame, table: DbTable) -> list[tuple[tuple, int]]:
+    """Consolidate a delta DataFrame, then collect it as
+    :func:`consolidated_rows` does."""
+    cols = [c.name for c in table.written_columns]
+    return consolidated_rows(consolidate(delta_df).select(*cols, DELTA_COL), table)
 
 
 def _epoch_key(offsets: Mapping[str, int]) -> str:
@@ -129,14 +146,18 @@ def write_snapshots(
     distributed_threshold: int = DISTRIBUTED_DELTA_THRESHOLD,
 ) -> dict[str, int]:
     """Materialize several snapshots (one input stream → up to N record
-    types, /root/reference/src/db/mod.rs:230-244) in ONE transaction
-    with the offsets they reflect. Returns per-table applied delta-row
+    types, reference ``src/db/mod.rs:230-244``) in ONE transaction with
+    the offsets they reflect. Returns per-table applied delta-row
     counts.
 
-    Per table: diff distributed against the parquet mirror, ship only
-    the net delta, stage the new snapshot under this epoch's directory;
-    then a single sink transaction applies every delta + offsets + the
-    mirror pointers. Idempotent per the module docstring.
+    Per table: persist the new snapshot, diff it distributed against
+    the parquet mirror, ship only the net delta, write the same cached
+    snapshot under this epoch's mirror directory; then a single sink
+    transaction applies every delta + offsets + the mirror pointers.
+    The epoch evaluates each view exactly once — the diff fills the
+    cache and the mirror write reads it — and every cache is released
+    before returning, also when the epoch fails. Idempotent per the
+    module docstring.
 
     Delta shipping has two topologies:
 
@@ -155,21 +176,25 @@ def write_snapshots(
     counted first and the staged path engages automatically when ANY
     table's delta exceeds ``distributed_threshold`` rows — a backfill
     epoch can no longer OOM the driver just because nobody opted in.
-    Without either, the driver-side path applies unconditionally."""
+    Only this size probe reads a delta twice, so only then are the
+    deltas persisted too. Without either, the driver-side path applies
+    unconditionally."""
     epoch = _epoch_key(offsets)
     mirror_epochs = {t.name: epoch for t, _ in views}
+    probe = applier is None and conn_factory is not None
 
-    # Compute every delta ONCE; persist so size-probe and apply share
-    # the diff join (and so the delta is materialized BEFORE the mirror
-    # overwrite — on a same-epoch retry old and new share the directory).
-    prepared: list[tuple[DbTable, DataFrame, DataFrame]] = []
-    for table, new_snapshot in views:
-        new = new_snapshot.select(*[c.name for c in table.written_columns])
-        delta = snapshot_delta(spark, sink, table, new, mirror).persist()
-        prepared.append((table, new, delta))
+    cached: list[DataFrame] = []
+    try:
+        prepared: list[tuple[DbTable, DataFrame, DataFrame]] = []
+        for table, new_snapshot in views:
+            new = new_snapshot.select(*[c.name for c in table.written_columns]).persist()
+            cached.append(new)
+            delta = snapshot_delta(spark, sink, table, new, mirror)
+            if probe:
+                cached.append(delta.persist())
+            prepared.append((table, new, delta))
 
-    if applier is None and conn_factory is not None:
-        if any(
+        if probe and any(
             delta.limit(distributed_threshold + 1).count() > distributed_threshold
             for _, _, delta in prepared
         ):
@@ -177,7 +202,6 @@ def write_snapshots(
 
             applier = DistributedApplier(conn_factory, sink.dialect)
 
-    try:
         if applier is not None:
             staged: list[DbTable] = []
             for table, new, delta in prepared:
@@ -195,10 +219,8 @@ def write_snapshots(
             return {name: ins + dels for name, (ins, dels) in results.items()}
         batches: dict[DbTable, list[tuple[tuple, int]]] = {}
         for table, new, delta in prepared:
-            cols = [c.name for c in table.written_columns]
-            batches[table] = [
-                (tuple(r[c] for c in cols), r[DELTA_COL]) for r in delta.collect()
-            ]
+            # collect BEFORE overwriting the mirror
+            batches[table] = consolidated_rows(delta, table)
             mirror.write(table, new, epoch)
         sink.advance_offsets(
             batches,
@@ -210,8 +232,8 @@ def write_snapshots(
             mirror.prune(table, epoch)
         return {t.name: len(b) for t, b in batches.items()}
     finally:
-        for _, _, delta in prepared:
-            delta.unpersist()
+        for df in cached:
+            df.unpersist()
 
 
 def write_snapshot(

@@ -132,8 +132,12 @@ class IncrementalRunner:
 
     def run_batch(self, events: DataFrame, upto: int) -> int:
         """One epoch: recompute all views on the prefix ≤ upto, apply the
-        net deltas + offsets in one transaction. Idempotent (retry ⇒
-        empty diff). Returns total delta rows applied."""
+        net deltas + offsets in one transaction. Returns total delta rows
+        applied. A replayed or stale epoch (``upto`` at or below the
+        committed offset) applies nothing and launches no Spark job —
+        committing it would roll the sink back to an older prefix."""
+        if upto <= self.resume_offset():
+            return 0
         bounded = self._bounded(events, upto)
         applied = write_snapshots(
             self.spark,
@@ -170,6 +174,11 @@ class IncrementalAggRunner:
     transaction, so crash/retry semantics match the snapshot path:
     a replayed epoch recomputes the identical delta (deterministic
     inputs) and overwrites its own epoch directory.
+
+    One evaluation per epoch: the ``delta_agg_sum`` result is persisted,
+    so the pending scan and the join against the old aggregate run once;
+    the collected delta and the mirror write (``delta_agg_next``) both
+    read that cache, which is released when the epoch ends.
 
     Scale: epoch cost is one churn-sized aggregate + one equi-join
     against the old aggregate's touched keys — independent of history
@@ -229,7 +238,7 @@ class IncrementalAggRunner:
         Idempotent: a replayed (already-committed) epoch sees an empty
         pending set and applies nothing."""
         from ..delta import delta_agg_next, delta_agg_sum, with_delta
-        from ..sinks.writer import deltas_to_rows
+        from ..sinks.writer import consolidated_rows
 
         start = self.resume_offset()
         if upto <= start:
@@ -241,17 +250,21 @@ class IncrementalAggRunner:
         old_agg = self.mirror.read_previous(
             self.sink, self.table, schema=self._agg_schema(prepared)
         )
+        # already consolidated: collected as is, no second aggregate
         agg_delta = delta_agg_sum(
             old_agg, with_delta(prepared), self.keys, self.val_col, self.out_col
-        )
-        batch = deltas_to_rows(agg_delta, self.table)
-        epoch = f"{self.source_name}-{upto}"
-        self.mirror.write(self.table, delta_agg_next(old_agg, agg_delta), epoch)
-        self.sink.advance_offsets(
-            {self.table: batch},
-            {self.source_name: upto},
-            mirror_epochs={self.table.name: epoch},
-        )
+        ).persist()
+        try:
+            batch = consolidated_rows(agg_delta, self.table)
+            epoch = f"{self.source_name}-{upto}"
+            self.mirror.write(self.table, delta_agg_next(old_agg, agg_delta), epoch)
+            self.sink.advance_offsets(
+                {self.table: batch},
+                {self.source_name: upto},
+                mirror_epochs={self.table.name: epoch},
+            )
+        finally:
+            agg_delta.unpersist()
         self.mirror.prune(self.table, epoch)
         return len(batch)
 

@@ -471,6 +471,181 @@ def test_incremental_agg_runner_o_churn_epochs(spark):
     s.close()
 
 
+def _small_events(spark, n=40):
+    """A tiny in-memory log for the dashboard view (10 users, every
+    fifth event an error, every third a purchase)."""
+    return spark.createDataFrame(
+        [
+            (i, i % 10, "error" if i % 5 == 4 else "purchase" if i % 3 == 0 else "view")
+            for i in range(n)
+        ],
+        "event_id long, user_id long, event_type string",
+    )
+
+
+def _persisted_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _counting_filter(spark):
+    """(accumulator, keep-all filter column) — the accumulator counts
+    every row the filter sees, i.e. how often the frame it sits on is
+    evaluated. Nondeterministic, so the optimizer neither moves nor
+    merges it."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def seen(_):
+        acc.add(1)
+        return True
+
+    return acc, F.udf(seen, "boolean").asNondeterministic()
+
+
+def test_stale_run_batch_leaves_sink_untouched(spark):
+    """A replayed or stale epoch (upto at or below the committed offset)
+    must not roll the sink back to the older prefix: nothing applied,
+    offsets kept, no Spark job launched."""
+    events = _small_events(spark)
+    sink = SqliteSink(":memory:")
+    r = IncrementalRunner(spark, sink, DASH, dashboard_view)
+    assert r.run_batch(events, 19) > 0
+    committed = sorted(sink.rows(DASH))
+    assert committed == expected_rows(events, 19)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("stale_run_batch", "stale epoch replay")
+    try:
+        assert r.run_batch(events, 9) == 0
+        assert r.run_batch(events, 19) == 0
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("stale_run_batch")) == []
+    assert sorted(sink.rows(DASH)) == committed
+    assert sink.read_offsets(DASH) == {"events": 19}
+    sink.close()
+
+
+def test_runner_evaluates_each_view_once_per_epoch(spark):
+    """An epoch evaluates each view's input once: the diff and the
+    mirror write both read the one cached snapshot, which is released
+    when the epoch ends. Checked for a single table and for a Union."""
+    events = _small_events(spark)
+    n19 = events.filter(F.col("event_id") <= 19).count()
+
+    acc, seen = _counting_filter(spark)
+    sink = SqliteSink(":memory:")
+    r = IncrementalRunner(spark, sink, DASH, lambda ev: dashboard_view(ev.filter(seen("event_id"))))
+    before = _persisted_ids(spark)
+    r.run_batch(events, 19)
+    assert acc.value == n19
+    assert _persisted_ids(spark) <= before
+    assert sorted(sink.rows(DASH)) == expected_rows(events, 19)
+    sink.close()
+
+    counts = DbTable(
+        name="type_counts",
+        columns=(DbColumn("event_type", "text"), DbColumn("n", "bigint")),
+        version=1,
+    )
+    acc_a, seen_a = _counting_filter(spark)
+    acc_b, seen_b = _counting_filter(spark)
+    sink = SqliteSink(":memory:")
+    r = IncrementalRunner.for_union(
+        spark,
+        sink,
+        [
+            (DASH, lambda ev: dashboard_view(ev.filter(seen_a("event_id")))),
+            (
+                counts,
+                lambda ev: ev.filter(seen_b("event_id"))
+                .groupBy("event_type")
+                .agg(F.count(F.lit(1)).alias("n")),
+            ),
+        ],
+    )
+    before = _persisted_ids(spark)
+    r.run_batch(events, 19)
+    assert (acc_a.value, acc_b.value) == (n19, n19)
+    assert _persisted_ids(spark) <= before
+    assert sorted(sink.rows(DASH)) == expected_rows(events, 19)
+    sink.close()
+
+
+def test_agg_runner_reads_pending_rows_once_per_epoch(spark):
+    """The aggregate runner's collect and its mirror write share one
+    evaluation of the epoch's delta: the pending rows are read once and
+    the cache is released after the epoch."""
+    from actyxos_data_flow_spark.streaming.runner import IncrementalAggRunner
+
+    events = spark.createDataFrame(
+        [(i, f"u{i % 3}", (i % 5) + 1) for i in range(30)],
+        "event_id long, user string, amount long",
+    )
+    table = DbTable(
+        "agg_once",
+        (DbColumn("user", "text"), DbColumn("total", "bigint"), DbColumn("_n", "bigint")),
+        version=1,
+    )
+    acc, seen = _counting_filter(spark)
+    sink = SqliteSink(":memory:")
+    r = IncrementalAggRunner(
+        spark, sink, table, ["user"], "amount", "total",
+        prepare=lambda ev: ev.filter(seen("event_id")),
+    )
+    r.run_batch(events, 9)
+    before = _persisted_ids(spark)
+    acc.value = 0
+    assert r.run_batch(events, 19) == 6
+    assert acc.value == 10  # pending offsets 10..19
+    assert _persisted_ids(spark) <= before
+    expected = (
+        events.filter(F.col("event_id") <= 19)
+        .groupBy("user")
+        .agg(F.sum("amount"), F.count(F.lit(1)))
+        .collect()
+    )
+    assert sorted(sink.rows(table)) == sorted(tuple(x) for x in expected)
+    sink.close()
+
+
+def test_fault_between_mirror_write_and_commit(spark, tmp_path, monkeypatch):
+    """A crash after the epoch's mirror write but before its sink
+    transaction: the sink still shows the previous epoch, the epoch's
+    cache is released on the error path, and the retry lands exactly on
+    the from-scratch recompute (no duplicated or lost rows)."""
+    events = _small_events(spark)
+    sink = SqliteSink(str(tmp_path / "fault.db"))
+    r = IncrementalRunner(spark, sink, DASH, dashboard_view, mirror_dir=str(tmp_path / "mirror"))
+    r.run_batch(events, 19)
+    committed = sorted(sink.rows(DASH))
+
+    commit = sink.advance_offsets
+    faults = []
+
+    def crash_once(*args, **kwargs):
+        if not faults:
+            faults.append(True)
+            raise RuntimeError("injected fault before commit")
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(sink, "advance_offsets", crash_once)
+    before = _persisted_ids(spark)
+    with pytest.raises(RuntimeError, match="injected fault"):
+        r.run_batch(events, 39)
+    assert faults and _persisted_ids(spark) <= before
+    assert sorted(sink.rows(DASH)) == committed
+    assert sink.read_offsets(DASH) == {"events": 19}
+    assert sink.mirror_epoch(DASH.name) == "events-19"
+
+    assert r.run_batch(events, 39) > 0
+    assert sorted(sink.rows(DASH)) == expected_rows(events, 39)
+    assert sink.read_offsets(DASH) == {"events": 39}
+    assert sink.mirror_epoch(DASH.name) == "events-39"
+    assert r.run_batch(events, 39) == 0
+    sink.close()
+
+
 def test_corpus_ingestor_dedups_within_and_across_batches(spark, tmp_path):
     """Batch 1 ingests two distinct docs (one intra-batch dup dropped,
     low-quality doc gated); batch 2 re-sends a batch-1 doc (dropped via
